@@ -116,18 +116,6 @@ def write_tables(out_dir: str, tables: dict[str, pa.Table],
                for name, t in tables.items())
 
 
-PAGE_SCHEMA = "url string, ts_epoch long, html binary, text string, lang string"
-
-
-def page_batches(batches):
-    """mapInPandas body over a ``spark.range`` of page ids: Common-Crawl
-    style pages (url, ts_epoch, html, text, lang) from the engine's own
-    page generator (``datagen``), with skewed geotags (30% of pages fall
-    in three hot spots).  The seed picks the id range."""
-    for pdf in batches:
-        yield datagen._page_batch(pdf["id"].values, skew=True)
-
-
 # --- WARC crawl epochs ----------------------------------------------------
 
 def _warc_record(uri: str, date: str, html: bytes, rec_no: int) -> bytes:
@@ -161,6 +149,7 @@ class Crawl:
         self.changed_share = changed_share
         self.next_id = id_offset(seed, 1 << 20)
         self.revision: dict[int, int] = {}
+        self.pages: dict[tuple[int, int], tuple[str, bytes, str]] = {}
         self.expected: dict[str, str] = {}
         self.records = 0
 
@@ -170,7 +159,13 @@ class Crawl:
         return ids
 
     def _page(self, page_id: int) -> tuple[str, bytes, str]:
-        rev = self.revision[page_id]
+        """(uri, html, text) of the page's current revision, made once."""
+        key = (page_id, self.revision[page_id])
+        if key not in self.pages:
+            self.pages[key] = self._make_page(*key)
+        return self.pages[key]
+
+    def _make_page(self, page_id: int, rev: int) -> tuple[str, bytes, str]:
         rng = np.random.default_rng([self.seed, page_id, rev])
         words = self.vocab[(len(self.vocab)
                             * rng.random(rng.integers(40, 121)) ** 2)

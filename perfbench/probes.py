@@ -1,9 +1,9 @@
-"""Measurement plumbing: spans, process-tree sampling, event-log parsing.
+"""Measurement plumbing: spans, process-tree figures, event-log parsing.
 
 Everything here observes the engine from outside: spans wrap the
-benchmark's calls into the engine's public functions, the process sampler
-reads ``/proc``, and the Spark numbers come from the uncompressed event
-log the traced run asks the session to write.
+benchmark's calls into the engine's public functions, the process-tree
+figures come from ``/proc``, and the Spark numbers come from the
+uncompressed event log the traced run asks the session to write.
 """
 
 from __future__ import annotations
@@ -11,13 +11,11 @@ from __future__ import annotations
 import json
 import os
 import statistics
-import threading
 import time
 from collections import defaultdict
 from contextlib import contextmanager
 
 _CLK_TCK = os.sysconf("SC_CLK_TCK")
-_PAGE = os.sysconf("SC_PAGE_SIZE")
 
 
 class Tracer:
@@ -85,50 +83,32 @@ def _tree(root: int) -> list[int]:
     return out
 
 
-def _stat(pid: int) -> tuple[float, int]:
-    """(cpu seconds incl. reaped children, resident bytes) of one pid."""
+def _cpu_s(pid: int) -> float:
+    """CPU seconds of one pid, including its reaped children."""
     try:
         with open(f"/proc/{pid}/stat") as f:
             fields = f.read().rsplit(")", 1)[1].split()
     except (OSError, IndexError):
-        return 0.0, 0
-    ticks = sum(int(x) for x in fields[11:15])   # utime stime cutime cstime
-    return ticks / _CLK_TCK, int(fields[21]) * _PAGE
+        return 0.0
+    return sum(int(x) for x in fields[11:15]) / _CLK_TCK   # u/s + cu/cs
 
 
 def tree_cpu_s(root: int) -> float:
-    return sum(_stat(p)[0] for p in _tree(root))
+    return sum(map(_cpu_s, _tree(root)))
 
 
-class RssSampler:
-    """Background sampler of the process tree's summed RSS (driver
-    Python, the JVM and the Python workers it forks) between ``start``
-    and ``stop``."""
-
-    def __init__(self, root: int, period_s: float = 0.1):
-        self.root, self.period = root, period_s
-        self.peak = 0
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._loop, daemon=True)
-
-    def _loop(self) -> None:
-        while not self._stop.is_set():
-            rss = sum(_stat(p)[1] for p in _tree(self.root))
-            self.peak = max(self.peak, rss)
-            self._stop.wait(self.period)
-
-    def take(self) -> int:
-        """Peak since the last call, in bytes."""
-        peak, self.peak = self.peak, 0
-        return peak
-
-    def start(self) -> None:
-        self._thread.start()
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread.is_alive():
-            self._thread.join(timeout=5)
+def tree_peak_rss(root: int) -> int:
+    """Sum over the process tree (driver Python, the JVM and the Python
+    workers it forks) of each process's peak resident bytes (VmHWM)."""
+    total = 0
+    for p in _tree(root):
+        try:
+            with open(f"/proc/{p}/status") as f:
+                total += next(int(line.split()[1]) * 1024 for line in f
+                              if line.startswith("VmHWM:"))
+        except (OSError, StopIteration):
+            continue
+    return total
 
 
 # --- Spark event log ------------------------------------------------------

@@ -2,7 +2,7 @@
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload geotag_flagship --seed 1 \
+    python3 perfbench/run.py --workload spatial_joins --seed 1 \
         --seconds 10 --trace 0
 
 One driver process, one closed-loop client: each operation starts when
@@ -106,7 +106,7 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool,
                  scale: str = "full", out_root: str = OUT) -> dict:
     """Set up, check, time and (if traced) profile one workload; return
     the run record."""
-    from probes import EventLog, RssSampler, Tracer, tree_cpu_s
+    from probes import EventLog, Tracer, tree_peak_rss
     from workloads import SCALES, WORKLOADS
     wl = WORKLOADS[name](SCALES[scale][name])
     run_dir = os.path.join(out_root, f"{name}-seed{seed}-trace{int(trace)}")
@@ -119,10 +119,9 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool,
     pid = os.getpid()
     by_label: dict[str, list[float]] = defaultdict(list)
     passes: list[float] = []
-    peaks: list[int] = []
+    cpus: list[float] = []
     setups: list[float] = []
     t_start = time.perf_counter()
-    rss = RssSampler(pid)
     try:
         for k in range(SETUPS):
             ctx.data = os.path.join(work, f"data{k}")
@@ -140,15 +139,12 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool,
         phases["prepare"] = time.perf_counter()
         for _ in range(wl.warmup_passes):   # the JIT is still compiling
             _one_pass(wl, ctx, record=None)
-        rss.start()
-        rss.take()
-        cpu0 = tree_cpu_s(pid)
         deadline = time.perf_counter() + seconds
         while len(passes) < MIN_PASSES or time.perf_counter() < deadline:
-            passes.append(_one_pass(wl, ctx, record=by_label))
-            peaks.append(rss.take())
-        cpu = tree_cpu_s(pid) - cpu0
-        rss.stop()
+            wall, cpu = _one_pass(wl, ctx, record=by_label)
+            passes.append(wall)
+            cpus.append(cpu)
+        peak_rss = tree_peak_rss(pid)
         phases["timed"] = time.perf_counter()
         if not wl.finish(ctx):
             ctx.failed = ctx.attempted
@@ -156,7 +152,6 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool,
             wl.ladder(ctx)
         phases["finish"] = time.perf_counter()
     finally:
-        rss.stop()
         if ctx.spark is not None:
             ctx.spark.stop()
     lat = [v for vs in by_label.values() for v in vs]
@@ -169,11 +164,13 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool,
                     "driver_memory": DRIVER_MEMORY},
         "setup_runs_s": setups, "setup_s": statistics.median(setups),
         "passes_s": passes, "pass_s": statistics.median(passes),
+        "op_gmean_s": statistics.geometric_mean(
+            statistics.median(v) for v in by_label.values()),
         "op_p50_s": statistics.median(lat), "op_p90_s": _pct(lat, 90),
         "op_samples": len(lat),
         "by_label": {k: statistics.median(v) for k, v in by_label.items()},
-        "cpu_s_per_pass": cpu / len(passes),
-        "peak_rss_mb": statistics.median(peaks) / 2 ** 20,
+        "cpu_s_per_pass": statistics.median(cpus),
+        "peak_rss_mb": peak_rss / 2 ** 20,
         "attempted": ctx.attempted, "failed": ctx.failed,
         "checks": wl.verdict,
         "phase_end_s": {k: v - t_start for k, v in phases.items()},
@@ -196,13 +193,18 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool,
     return res
 
 
-def _one_pass(wl, ctx, record) -> float:
+def _one_pass(wl, ctx, record) -> tuple[float, float]:
     """Run one pass of operations, closed loop; count every operation in
     ``ctx.attempted``/``ctx.failed`` and, when ``record`` is given, append
-    each latency under its label.  Returns the pass wall time."""
+    each latency under its label.  Returns the wall time and the process
+    tree's CPU seconds of the operations (input landing in ``pass_ops``
+    and maintenance in ``after_pass`` are outside both)."""
+    from probes import tree_cpu_s
     tr = ctx.tracer
     tr.pass_id = 0 if record is None else tr.pass_id + 1   # 0: untimed
     ops = wl.pass_ops(ctx)
+    pid = os.getpid()
+    cpu0 = tree_cpu_s(pid)
     p0 = time.perf_counter()
     for label, op in ops:
         ctx.group(f"timed{tr.pass_id}:{label}" if tr.pass_id
@@ -219,12 +221,24 @@ def _one_pass(wl, ctx, record) -> float:
         ctx.attempted += 1
         ctx.failed += not ok
     wall = time.perf_counter() - p0
+    cpu = tree_cpu_s(pid) - cpu0
     wl.after_pass(ctx)
-    return wall
+    return wall, cpu
+
+
+SPARK_TOTALS = ("jobs", "tasks", "executor_cpu_s", "executor_run_s", "gc_s",
+                "scan_bytes", "shuffle_write_bytes", "shuffle_read_bytes",
+                "spill_bytes", "result_bytes")
+# per-layer metrics every workload reports (0 where it runs no such layer)
+COMMON_LAYERS = frozenset(
+    ["session.start_s", "datagen.generate_s", "queries.build_s",
+     "trace.pass_s", "process.peak_rss_mb", "spark.driver_collect_s"]
+    + [f"spark.{k}" for k in SPARK_TOTALS])
 
 
 def _layers(wl, ctx, ev, res: dict) -> dict:
-    """Per-layer numbers common to every workload, plus the workload's."""
+    """Per-layer numbers common to every workload, plus the workload's;
+    exactly the names ``COMMON_LAYERS | wl.layer_names()``."""
     tr = ctx.tracer
     timed = ev.groups_matching(lambda g: g.startswith("timed"))
     n = len(res["passes_s"])
@@ -244,26 +258,40 @@ def _layers(wl, ctx, ev, res: dict) -> dict:
             {f"timed{s['pass']}:{s['attrs']['label']}": s["end"] - s["start"]
              for s in tr.spans if s["name"] == "op" and s["pass"]}) / n,
     }
-    for key in ("jobs", "tasks", "executor_cpu_s", "executor_run_s", "gc_s",
-                "scan_bytes", "shuffle_write_bytes", "shuffle_read_bytes",
-                "spill_bytes", "result_bytes"):
+    for key in SPARK_TOTALS:
         out[f"spark.{key}"] = ev.total(timed, key) / n
     out.update(wl.layers(ctx, ev, res))
+    want = COMMON_LAYERS | wl.layer_names()
+    if set(out) != want:
+        raise RuntimeError(f"{wl.name} per-layer metrics: missing "
+                           f"{sorted(want - set(out))}, undeclared "
+                           f"{sorted(set(out) - want)}")
     return out
 
 
 def _result_line(res: dict, spec: dict, trace: bool) -> dict:
+    """The result line: BENCHMARK.json's end-to-end metrics, or with
+    ``trace`` its per-layer ones.  A per-layer metric of a layer this
+    workload does not run reads 0; a name no workload produces raises."""
+    from workloads import WORKLOADS
+    produced = COMMON_LAYERS.union(
+        *(w.layer_names() for w in WORKLOADS.values()))
     metrics = {}
     for m in spec["per_layer" if trace else "end_to_end"]:
-        src = res["layers"] if trace else res
-        metrics[m["name"]] = {"value": float(src.get(m["name"], 0.0)),
-                              "unit": m["unit"]}
+        name = m["name"]
+        if not trace:
+            value = res[name]
+        elif name in produced:
+            value = res["layers"].get(name, 0.0)
+        else:
+            raise KeyError(f"no workload produces per-layer metric {name!r}")
+        metrics[name] = {"value": float(value), "unit": m["unit"]}
     return {"correct": res["failed"] == 0, "attempted": res["attempted"],
             "failed": res["failed"], "metrics": metrics}
 
 
 NAMED_UNITS = {
-    "geotag_docs_per_s": "docs/s", "spatial_pass_s": "s",
+    "spatial_pass_s": "s",
     "spatial_query_p50_s": "s", "spatial_query_p90_s": "s",
     "dedup_pass_s": "s", "dedup_query_p50_s": "s", "dedup_query_p90_s": "s",
     "ingest_docs_per_s": "pages/s", "resolve_p50_s": "s",
@@ -317,8 +345,8 @@ def _run_all(args) -> int:
         attempted += plain["attempted"]
         failed += plain["failed"]
         for k, v in plain["named"].items():
-            key = k if k in ("geotag_docs_per_s",) or not k.startswith(
-                ("setup", "peak", "failed")) else f"{name}.{k}"
+            key = f"{name}.{k}" if k.startswith(
+                ("setup", "peak", "failed")) else k
             named[key] = {"value": v, "unit": NAMED_UNITS[k]}
         overhead[name] = traced["pass_s"] - plain["pass_s"]
         print(f"# {name} tracing overhead: pass {traced['pass_s']:.4f} s "

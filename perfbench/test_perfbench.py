@@ -5,7 +5,8 @@
 Checks that every workload prints every end-to-end metric with its unit
 and no failed operation, that a planted wrong answer is counted as a
 failed operation, that changing the seed changes the inputs but not the
-metric names, and that a traced run emits every per-layer metric.
+metric names, that the workloads' per-layer metrics cover BENCHMARK.json's,
+and that a traced run of each workload produces its per-layer metrics.
 """
 
 from __future__ import annotations
@@ -38,7 +39,14 @@ def _units(line, kind):
         m["name"]: m["unit"] for m in SPEC[kind]}
 
 
-@pytest.mark.parametrize("name", sorted(workloads.WORKLOADS))
+BENCH_WORKLOADS = [w["name"] for w in SPEC["workloads"]]
+
+
+def test_benchmark_names_the_workloads():
+    assert sorted(BENCH_WORKLOADS) == sorted(workloads.WORKLOADS)
+
+
+@pytest.mark.parametrize("name", BENCH_WORKLOADS)
 def test_workload_prints_every_metric(tmp_path, name):
     res, line = _run(tmp_path, name)
     got, want = _units(line, "end_to_end")
@@ -47,6 +55,7 @@ def test_workload_prints_every_metric(tmp_path, name):
     assert line["attempted"] >= 1
     assert all(v["value"] > 0 for v in line["metrics"].values())
     assert res["named"]["failed_ops_ratio"] == 0
+    run._report(res)   # the named figures print with their units
 
 
 def test_planted_wrong_answer_counts_as_failed(tmp_path, monkeypatch):
@@ -69,8 +78,41 @@ def test_seed_changes_inputs_not_metric_names(tmp_path):
     assert set(line_a["metrics"]) == set(line_b["metrics"])
 
 
-def test_traced_run_emits_every_layer_metric(tmp_path):
-    _, line = _run(tmp_path, "geotag_flagship", trace=True)
+def test_workload_layers_cover_per_layer_metrics():
+    produced = run.COMMON_LAYERS.union(
+        *(workloads.WORKLOADS[w].layer_names() for w in BENCH_WORKLOADS))
+    assert produced == {m["name"] for m in SPEC["per_layer"]}
+
+
+def test_result_line_rejects_unproduced_metric():
+    spec = {"per_layer": [{"name": "operators.nothing.s", "unit": "s"}]}
+    with pytest.raises(KeyError):
+        run._result_line({"layers": {}, "failed": 0, "attempted": 1}, spec,
+                         True)
+
+
+# a layer metric that is a count or size of work the workload does, so it
+# is positive on a correct traced run
+WORK_DONE = {
+    "spatial_joins": ["operators.sjoin.candidate_pairs",
+                      "operators.knn.window.rows_per_result",
+                      "queries.knn_join.jobs"],
+    "dedup_curation": ["operators.dedup.candidate_pairs",
+                       "operators.dedup.max_bucket",
+                       "operators.components.jobs"],
+    "warc_ingest": ["sources.warc.records", "functions.textkernels.rows",
+                    "plans.store.delta_bytes"],
+}
+
+
+@pytest.mark.parametrize("name", BENCH_WORKLOADS)
+def test_traced_run_emits_its_layer_metrics(tmp_path, name):
+    # run._layers raises unless the keys are exactly the declared names
+    res, line = _run(tmp_path, name, trace=True)
+    assert set(res["layers"]) == (run.COMMON_LAYERS
+                                  | workloads.WORKLOADS[name].layer_names())
     got, want = _units(line, "per_layer")
     assert got == want
-    assert line["metrics"]["functions.textkernels.extract_s"]["value"] != 0
+    assert line["correct"]
+    for key in WORK_DONE[name] + ["spark.jobs", "spark.tasks"]:
+        assert line["metrics"][key]["value"] > 0, key

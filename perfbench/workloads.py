@@ -11,8 +11,7 @@ spans, prefix ladders and the Spark event log.
 Why these (see NOTES.md): the spatial leaves are JVM codegen, broadcast
 and shuffle with almost no Python; the dedup leaves are shuffle, pair
 fan-out and iterative jobs; the WARC epochs are the only path through
-``sources`` and ``plans``.  The flagship geotag pipeline, the paper's
-headline, is runnable too but not in BENCHMARK.json (run budget).
+``sources`` and ``plans``.
 """
 
 from __future__ import annotations
@@ -32,9 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 import inputs
-from geoio_jl_spark import dialect as D
 from geoio_jl_spark import queries as Q
-from geoio_jl_spark.functions.textkernels import extract_page, html_to_text
+from geoio_jl_spark.functions.textkernels import html_to_text
 from geoio_jl_spark.operators import sjoin as SJ
 from geoio_jl_spark.operators.cells import assign_cells
 from geoio_jl_spark.plans import store as ST
@@ -165,6 +163,12 @@ class Workload:
         """Traced runs only: untimed extra actions the per-layer numbers
         need (prefix ladders), run while the session is still up."""
 
+    @classmethod
+    def layer_names(cls) -> frozenset[str]:
+        """The workload's own per-layer metric names: exactly the keys
+        ``layers`` returns."""
+        return frozenset()
+
     def layers(self, ctx, ev, res: dict) -> dict:
         return {}
 
@@ -204,11 +208,15 @@ class LeafMix(Workload):
 
         def oracles() -> dict[str, tuple]:
             con = duck(ctx.data, self.tables)
+            by_sql = {}   # the three kNN leaves share one oracle
             try:
-                return {leaf: canon_arrow(con.execute(reg[leaf][1]).arrow())
-                        for leaf in self.leaves}
+                for leaf in self.leaves:
+                    sql = reg[leaf][1]
+                    if sql not in by_sql:
+                        by_sql[sql] = canon_arrow(con.execute(sql).arrow())
             finally:
                 con.close()
+            return {leaf: by_sql[reg[leaf][1]] for leaf in self.leaves}
 
         def spark_leaf(leaf: str) -> tuple:
             ctx.group(f"prepare:{leaf}")
@@ -250,6 +258,12 @@ class LeafMix(Workload):
         return {f"{p}_pass_s": res["pass_s"],
                 f"{p}_query_p50_s": res["op_p50_s"],
                 f"{p}_query_p90_s": res["op_p90_s"]}
+
+    @classmethod
+    def layer_names(cls) -> frozenset[str]:
+        return frozenset(["trace.self_residual_s"] + [
+            f"queries.{leaf}.{k}" for leaf in cls.leaves
+            for k in ("exec_s", "jobs")])
 
     def layers(self, ctx, ev, res: dict) -> dict:
         out = {}
@@ -294,6 +308,17 @@ class SpatialJoins(LeafMix):
                     ("aggregate", pairs.groupBy("poly_id").count())]
         self.selfs = prefix_ladder(ctx, stages)
 
+    @classmethod
+    def layer_names(cls) -> frozenset[str]:
+        return super().layer_names() | {
+            "operators.cells.assign_s", "trace.scan_s", "trace.aggregate_s",
+            "operators.sjoin.candidate_pairs", "operators.sjoin.refine_ratio",
+            "operators.sjoin.broadcast_bytes",
+            "operators.sjoin.broadcast_build_s", "operators.sjoin.join_s",
+            "operators.knn.window.rows_per_result",
+            "operators.knn.partial.rows_per_result",
+            "operators.knn.pruned.rows_per_result"}
+
     def layers(self, ctx, ev, res: dict) -> dict:
         out = super().layers(ctx, ev, res)
         out["operators.cells.assign_s"] = self.selfs["operators.cells.assign"]
@@ -323,13 +348,13 @@ class SpatialJoins(LeafMix):
 
 class DedupCuration(LeafMix):
     name = "dedup_curation"
-    # The pair, bucket and components leaves plus pii_redact; exact_dedup
-    # and the per-document hash and chunk leaves are left out to keep a run
-    # inside the time budget (NOTES.md).  Every leaf feeds a later curation stage,
-    # so each is written on (noop sink); prepare() checked its output.
+    # The MinHash, n-gram pair and components leaves plus pii_redact; the
+    # other dedup leaves are left out to keep a run inside the time budget
+    # (NOTES.md).  Every leaf feeds a later curation stage, so each is
+    # written on (noop sink); prepare() checked its output.
     leaves = {leaf: "noop" for leaf in (
-        "minhash_lsh", "minhash_star_edges", "connected_components",
-        "ngram_jaccard", "ngram_jaccard_capped", "pii_redact")}
+        "minhash_lsh", "connected_components", "ngram_jaccard",
+        "pii_redact")}
 
     def _op(self, ctx, leaf, fn):
         run = super()._op(ctx, leaf, fn)
@@ -363,6 +388,13 @@ class DedupCuration(LeafMix):
         self.max_bucket = float(exploded_shingles(docs).groupBy("sh").count()
                                 .agg(F.max("count")).first()[0])
 
+    @classmethod
+    def layer_names(cls) -> frozenset[str]:
+        return super().layer_names() | {
+            "operators.dedup.candidate_pairs", "operators.dedup.pair_yield",
+            "operators.dedup.max_bucket", "operators.dedup.task_skew",
+            "operators.components.rounds", "operators.components.jobs"}
+
     def layers(self, ctx, ev, res: dict) -> dict:
         out = super().layers(ctx, ev, res)
         timed = ev.groups_matching(lambda g: g.startswith("timed"))
@@ -389,159 +421,10 @@ class DedupCuration(LeafMix):
         return out
 
 
-# --- flagship geotag pipeline -----------------------------------------------
-
-def _polygons(ctx) -> DataFrame:
-    return Q._triangles(ctx.spark, ctx.data)
-
-
-def flagship_stages(ctx, pages: DataFrame) -> list[tuple[str, DataFrame]]:
-    """The flagship pipeline of tools/scaling_probe.pipeline, as its
-    successive prefixes: scan, +extract (one Arrow crossing), +cells,
-    +salted broadcast point-in-polygon join, +per-polygon aggregate."""
-    scan = pages.select("url", "html")
-    extracted = scan.select("url", extract_page("html").alias("p"))
-    pts = extracted.select(
-        ((F.col("p.lon") + 180.0) * 100).cast("bigint").alias("lon_i"),
-        ((F.col("p.lat") + 85.0) * 100).cast("bigint").alias("lat_i"),
-        F.xxhash64("url").alias("doc_id"),
-        F.length("p.text").alias("text_len"))
-    cells = assign_cells(pts, res=3).withColumn(
-        "salt", F.pmod(F.hash("doc_id"), F.lit(16)))
-    tiled_salted = SJ.tile_polygons(_polygons(ctx), 3).withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(15))))
-    joined = cells.join(F.broadcast(tiled_salted), ["cell_id", "salt"]).filter(
-        F.expr(D.point_in_triangle_sql("lon_i", "lat_i")))
-    agg = joined.groupBy("poly_id").agg(
-        F.count("*").alias("n"), F.sum("text_len").alias("tc"))
-    return [("scan", scan), ("functions.textkernels.extract", extracted),
-            ("operators.cells.assign", cells),
-            ("operators.sjoin.join", joined), ("aggregate", agg)]
-
-
-_GEO_ORACLE = f"""
-WITH p AS (
-  SELECT text, decode(html) AS h FROM pages
-), c AS (
-  SELECT length(text) AS tl,
-    CAST(trunc((CAST(regexp_extract(h, 'geo.position" content="[^;]*;([^"]*)"', 1)
-                     AS DOUBLE) + 180.0) * 100) AS BIGINT) AS lon_i,
-    CAST(trunc((CAST(regexp_extract(h, 'geo.position" content="([^;]*);', 1)
-                     AS DOUBLE) + 85.0) * 100) AS BIGINT) AS lat_i
-  FROM p
-), t AS ({D.TRIANGLES_SQL})
-SELECT poly_id, count(*) AS n, sum(tl) AS tc
-FROM c JOIN t ON {D.point_in_triangle_sql('c.lon_i', 'c.lat_i')}
-GROUP BY poly_id
-"""
-
-
-class GeotagFlagship(Workload):
-    """One operation = one pass of the flagship pipeline, collected."""
-
-    name = "geotag_flagship"
-    task_cpus = 2   # each task is a JVM thread plus an Arrow Python worker
-
-    def setup(self, ctx) -> dict:
-        n = self.scale["pages"]
-        start = inputs.id_offset(ctx.seed, n)
-        path = f"{ctx.data}/pages.parquet"
-        with ctx.tracer.span("datagen.generate"):
-            (ctx.spark.range(start, start + n, 1, ctx.cores * 2)
-             .mapInPandas(inputs.page_batches, inputs.PAGE_SCHEMA)
-             .drop("ts_epoch").write.parquet(path))
-        inputs.write_tables(ctx.data, {"nation": inputs.nation()}, 1)
-        return {"rows": n, "page_id_start": start, "skew_share": 0.3,
-                "parquet_bytes": du(path)}
-
-    def _pages(self, ctx) -> DataFrame:
-        return ctx.spark.read.parquet(f"{ctx.data}/pages.parquet")
-
-    def prepare(self, ctx) -> None:
-        """Per-polygon counts from an independent DuckDB computation over
-        the generated pages (geotag regex-parsed from the html, text length
-        from the generator's own text column), and a byte-identity check
-        of the extracted text on sampled urls."""
-        con = duckdb.connect()
-        con.execute(f"CREATE VIEW pages AS SELECT * FROM read_parquet("
-                    f"'{ctx.data}/pages.parquet/*.parquet')")
-        con.execute(f"CREATE VIEW nation AS SELECT * FROM read_parquet("
-                    f"'{ctx.data}/nation.parquet/*.parquet')")
-        want = canon_arrow(con.execute(_GEO_ORACLE).arrow())
-        self.expected = want
-        self.rows = {"pages": self.scale["pages"]}
-        sample = [r[0] for r in con.execute(
-            f"SELECT url FROM pages USING SAMPLE reservoir(200 ROWS) "
-            f"REPEATABLE ({ctx.seed % 100000})").fetchall()]
-        truth = dict(con.execute(
-            "SELECT url, text FROM pages WHERE list_contains($1, url)",
-            [sample]).fetchall())
-        con.close()
-        ctx.group("prepare:extract_sample")
-        got = dict(self._pages(ctx).filter(F.col("url").isin(sample))
-                   .select("url", html_to_text("html")).collect())
-        self.verdict["extract_identity"] = got == truth
-        ctx.group("prepare:pipeline")
-        agg = flagship_stages(ctx, self._pages(ctx))[-1][1]
-        self.verdict["pipeline"] = same(canon(agg.columns, agg.collect()), want)
-
-    def pass_ops(self, ctx):
-        def run() -> bool:
-            with ctx.tracer.span("queries.build", leaf="flagship"):
-                agg = flagship_stages(ctx, self._pages(ctx))[-1][1]
-            with ctx.tracer.span("queries.exec", leaf="flagship"):
-                rows = agg.collect()
-            return (self.verdict["extract_identity"]
-                    and same(canon(agg.columns, rows), self.expected))
-        return [("flagship", run)]
-
-    def docs_per_s(self, res: dict) -> float:
-        return self.scale["pages"] / res["pass_s"]
-
-    def named(self, res: dict) -> dict:
-        return {"geotag_docs_per_s": res["docs_per_s"]}
-
-    def ladder(self, ctx) -> None:
-        self.selfs = prefix_ladder(
-            ctx, lambda: flagship_stages(ctx, self._pages(ctx)))
-
-    def layers(self, ctx, ev, res: dict) -> dict:
-        selfs = self.selfs
-        ext = ev.groups_matching(
-            lambda g: g.endswith(":functions.textkernels.extract"))
-        out = {
-            "functions.textkernels.extract_s": selfs[
-                "functions.textkernels.extract"],
-            "functions.textkernels.rows": float(self.scale["pages"]),
-            "functions.textkernels.python_bytes_sent": ev.node_metric(
-                ext, "ArrowEvalPython", "data sent to Python workers")
-            / max(len(ext), 1),
-            "functions.textkernels.python_bytes_received": ev.node_metric(
-                ext, "ArrowEvalPython", "data returned from Python workers")
-            / max(len(ext), 1),
-            "operators.cells.assign_s": selfs["operators.cells.assign"],
-            "operators.sjoin.join_s": selfs["operators.sjoin.join"],
-            "trace.scan_s": selfs["scan"],
-            "trace.aggregate_s": selfs["aggregate"],
-            "trace.self_residual_s": res["pass_s"] - sum(selfs.values()),
-        }
-        join = ev.groups_matching(lambda g: g.endswith(":aggregate"))
-        cand = ev.node_metric(join, "BroadcastHashJoin", "number of output rows")
-        kept = _column_sum(self.expected, "n")
-        n = max(len(join), 1)
-        out["operators.sjoin.candidate_pairs"] = cand / n
-        out["operators.sjoin.refine_ratio"] = kept / cand if cand else 0.0
-        out["operators.sjoin.broadcast_bytes"] = ev.node_metric(
-            join, "BroadcastExchange", "data size") / n
-        out["operators.sjoin.broadcast_build_s"] = ev.node_metric(
-            join, "BroadcastExchange", "time to build") / 1e3 / n
-        return out
-
-
 # --- WARC crawl epochs --------------------------------------------------------
 
 class WarcIngest(Workload):
-    """One pass = one operation = one crawl epoch: ingest a landed
+    """One pass = one crawl epoch of two operations: ingest a landed
     ``.warc.gz`` segment set (read → html_to_text → CDC delta write), then
     read the merged view."""
 
@@ -584,28 +467,27 @@ class WarcIngest(Workload):
         noop(ST.resolve(ctx.spark, self.store))
 
     def pass_ops(self, ctx):
-        """Land the next epoch's segments (untimed), return its operation."""
+        """Land the next epoch's segments (untimed); return its two
+        operations, the ingest and then a read of the merged view."""
         self.epoch += 1
         e = self.epoch
         props = self.crawl.epoch(self._seg(ctx, e), e)
         self.epoch_props[e] = props
 
-        def epoch() -> bool:
-            t = time.perf_counter()
+        def ingest() -> bool:
             with ctx.tracer.span("plans.store.ingest", epoch=e):
                 got = ST.ingest(ctx.spark, self.store, self._incoming(ctx, e),
                                 e)
-            t_ingest = time.perf_counter()
-            with ctx.tracer.span("plans.store.resolve", epoch=e):
-                noop(ST.resolve(ctx.spark, self.store))
-            self._stat("ingest_s", t_ingest - t)
-            self._stat("resolve_s", time.perf_counter() - t_ingest)
-            self._stat("delta_bytes", du(ST._delta_dir(self.store, e)))
             self._stat("rows_written", got["inserted"] + got["updated"])
             return (self.verdict["initial"] and got["inserted"] == props["new"]
                     and got["updated"] == props["changed"])
 
-        return [("epoch", epoch)]
+        def resolve() -> bool:   # its output is checked by finish()
+            with ctx.tracer.span("plans.store.resolve", epoch=e):
+                noop(ST.resolve(ctx.spark, self.store))
+            return True
+
+        return [("ingest", ingest), ("resolve", resolve)]
 
     def _stat(self, key: str, value: float) -> None:
         self.stats.setdefault(key, []).append(value)
@@ -615,6 +497,7 @@ class WarcIngest(Workload):
         compact the store (maintenance between epochs: its time is the
         per-layer ``plans.store.compact_s``, not part of a pass)."""
         shutil.rmtree(self._seg(ctx, self.epoch), ignore_errors=True)
+        self._stat("delta_bytes", du(ST._delta_dir(self.store, self.epoch)))
         if self.epoch % self.scale["compact_every"]:
             return
         ctx.group(f"compact{self.epoch}")
@@ -637,11 +520,11 @@ class WarcIngest(Workload):
     def docs_per_s(self, res: dict) -> float:
         """Pages per second from landed segment to committed delta."""
         n = self.scale["records_per_segment"] * self.scale["segments"]
-        return n / statistics.median(self.stats["ingest_s"])
+        return n / res["by_label"]["ingest"]
 
     def named(self, res: dict) -> dict:
         return {"ingest_docs_per_s": res["docs_per_s"],
-                "resolve_p50_s": statistics.median(self.stats["resolve_s"]),
+                "resolve_p50_s": res["by_label"]["resolve"],
                 "store_bytes_per_user_byte": self.store_bytes
                 / self.live_bytes}
 
@@ -653,6 +536,20 @@ class WarcIngest(Workload):
         self.selfs = prefix_ladder(ctx, lambda: [
             ("read", warc.read(ctx.spark, self._seg(ctx, e))),
             ("extract", self._incoming(ctx, e))])
+
+    @classmethod
+    def layer_names(cls) -> frozenset[str]:
+        return frozenset(["trace.self_residual_s"] + [
+            f"sources.warc.{k}" for k in (
+                "read_s", "records", "bytes_in", "records_per_s",
+                "records_per_segment")] + [
+            f"functions.textkernels.{k}" for k in (
+                "extract_s", "rows", "python_bytes_sent",
+                "python_bytes_received")] + [
+            f"plans.store.{k}" for k in (
+                "ingest_s", "rows_written", "delta_bytes",
+                "write_amplification", "resolve_s", "compact_s",
+                "bytes_rewritten")])
 
     def layers(self, ctx, ev, res: dict) -> dict:
         """Store self time is the ingest time minus the read + extract
@@ -679,17 +576,17 @@ class WarcIngest(Workload):
             "functions.textkernels.python_bytes_received": ev.node_metric(
                 ext, "ArrowEvalPython", "data returned from Python workers")
             / max(len(ext), 1),
-            "plans.store.ingest_s": statistics.median(st["ingest_s"]),
+            "plans.store.ingest_s": res["by_label"]["ingest"],
             "plans.store.rows_written": statistics.median(st["rows_written"]),
             "plans.store.delta_bytes": delta,
             "plans.store.write_amplification": delta / changed_bytes,
-            "plans.store.resolve_s": statistics.median(st["resolve_s"]),
+            "plans.store.resolve_s": res["by_label"]["resolve"],
             "plans.store.compact_s": statistics.median(
                 st.get("compact_s") or [0.0]),
             "plans.store.bytes_rewritten": statistics.median(
                 st.get("bytes_rewritten") or [0.0]),
-            "trace.self_residual_s": res["pass_s"] - statistics.median(
-                st["ingest_s"]) - statistics.median(st["resolve_s"]),
+            "trace.self_residual_s": res["pass_s"] - res["by_label"][
+                "ingest"] - res["by_label"]["resolve"],
         }
 
     def _changed_text_bytes(self, props: dict) -> float:
@@ -698,15 +595,13 @@ class WarcIngest(Workload):
         return (props["new"] + props["changed"]) * per_page
 
 
-WORKLOADS = {w.name: w for w in (GeotagFlagship, SpatialJoins, DedupCuration,
-                                 WarcIngest)}
+WORKLOADS = {w.name: w for w in (SpatialJoins, DedupCuration, WarcIngest)}
 
 # Sizes per scale.  "full" is what the benchmark measures; "tiny" is the
 # self-test's.
 SCALES = {
     "full": {
-        "geotag_flagship": {"pages": 20_000},
-        "spatial_joins": {"docs": 30_000, "dup_share": 0.0,
+        "spatial_joins": {"docs": 60_000, "dup_share": 0.0,
                           "near_share": 0.0, "cluster": 4, "tokens": (1, 3)},
         "dedup_curation": {"docs": 400, "dup_share": 0.05,
                            "near_share": 0.2, "cluster": 4,
@@ -716,7 +611,6 @@ SCALES = {
                         "compact_every": 2},
     },
     "tiny": {
-        "geotag_flagship": {"pages": 2_000},
         "spatial_joins": {"docs": 2_000, "dup_share": 0.0,
                           "near_share": 0.0, "cluster": 4, "tokens": (1, 3)},
         "dedup_curation": {"docs": 120, "dup_share": 0.05,
