@@ -97,6 +97,43 @@ def tree_cpu_s(root: int) -> float:
     return sum(map(_cpu_s, _tree(root)))
 
 
+def adopt_orphans() -> None:
+    """Make this process the reaper of its orphaned descendants (Linux
+    ``PR_SET_CHILD_SUBREAPER``): a Python worker whose JVM has exited then
+    stays in this process's tree, where ``end_tree`` waits for it."""
+    import ctypes
+    ctypes.CDLL(None, use_errno=True).prctl(36, 1, 0, 0, 0)
+
+
+def end_tree(root: int, grace: float = 20.0) -> list[int]:
+    """Wait until every descendant of ``root`` (this process) has exited
+    and been reaped; SIGKILL whatever is still there after ``grace``
+    seconds.  Returns the pids that had to be killed."""
+    import signal
+    deadline = time.monotonic() + grace
+    killed: list[int] = []
+    while True:
+        while True:   # reap exited children, adopted orphans included
+            try:
+                pid, _ = os.waitpid(-1, os.WNOHANG)
+            except ChildProcessError:
+                break
+            if pid == 0:
+                break
+        left = [p for p in _tree(root) if p != root]
+        if not left:
+            return killed
+        if time.monotonic() > deadline:
+            for p in left:
+                if p not in killed:
+                    try:
+                        os.kill(p, signal.SIGKILL)
+                    except ProcessLookupError:
+                        continue
+                    killed.append(p)
+        time.sleep(0.02)
+
+
 def tree_peak_rss(root: int) -> int:
     """Sum over the process tree (driver Python, the JVM and the Python
     workers it forks) of each process's peak resident bytes (VmHWM)."""

@@ -6,7 +6,7 @@ Run from the root of a checkout:
         --seconds 10 --trace 0
 
 One driver process, one closed-loop client: each operation starts when
-the previous one returns.  The run sets up three times (session start,
+the previous one returns.  The run sets up five times (session start,
 input generation, materialisation) and reports the median, runs an
 untimed pass that checks every output and, for the query-leaf mixes, an
 untimed warm-up pass, then times at least two whole passes, and more
@@ -35,7 +35,7 @@ from collections import defaultdict
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 OUT = os.path.join(HERE, "out")
-SETUPS = 3
+SETUPS = 5
 MIN_PASSES = 2     # a median needs more than one timed pass
 DRIVER_MEMORY = "2g"   # fits the 15 GB host beside Python workers
 
@@ -93,6 +93,24 @@ def _start_session(wl, ctx, work: str, tmp: str, event_dir: str | None):
     # it, which would be written outside the checkout
     setattr(spark.sparkContext, shipping._FLAG, True)
     return spark
+
+
+def _stop_jvm() -> None:
+    """End the Spark JVM.  ``spark.stop()`` leaves it running, and after
+    this process exits it lives on for seconds; closing its stdin makes it
+    exit now, and its Python workers follow it."""
+    from pyspark import SparkContext
+    gw = SparkContext._gateway
+    if gw is None:
+        return
+    proc = getattr(gw, "proc", None)
+    try:
+        gw.shutdown()
+    except Exception:   # the JVM may be gone already
+        pass
+    if proc is not None and proc.stdin is not None:
+        proc.stdin.close()
+    SparkContext._gateway = SparkContext._jvm = None
 
 
 def _pct(values: list[float], q: float) -> float:
@@ -369,6 +387,19 @@ def main(argv=None) -> int:
               "the root of a full checkout", file=sys.stderr)
         return 2
     sys.path[:0] = [ROOT, HERE]
+    from probes import adopt_orphans, end_tree
+    adopt_orphans()
+    try:
+        return _main(args)
+    finally:   # on every way out: no process of this run outlives it
+        _stop_jvm()
+        killed = end_tree(os.getpid())
+        if killed:
+            print(f"perfbench: killed {len(killed)} process(es) that did "
+                  "not exit", file=sys.stderr)
+
+
+def _main(args) -> int:
     if args.workload == "all":
         return _run_all(args)
     from workloads import WORKLOADS

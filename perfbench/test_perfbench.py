@@ -1,4 +1,4 @@
-"""Self-test of the benchmark at a tiny size.
+"""Self-test of the benchmark, at a tiny size where it can be.
 
     python3 -m pytest perfbench/test_perfbench.py -q
 
@@ -6,7 +6,8 @@ Checks that every workload prints every end-to-end metric with its unit
 and no failed operation, that a planted wrong answer is counted as a
 failed operation, that changing the seed changes the inputs but not the
 metric names, that the workloads' per-layer metrics cover BENCHMARK.json's,
-and that a traced run of each workload produces its per-layer metrics.
+that a traced run of each workload produces its per-layer metrics, and
+that the benchmark command leaves no process running when it exits.
 """
 
 from __future__ import annotations
@@ -116,3 +117,20 @@ def test_traced_run_emits_its_layer_metrics(tmp_path, name):
     assert line["correct"]
     for key in WORK_DONE[name] + ["spark.jobs", "spark.tasks"]:
         assert line["metrics"][key]["value"] > 0, key
+
+
+def test_command_leaves_no_process_behind():
+    # with this process as subreaper, whatever the command leaves running
+    # is re-parented here, so it shows among this process's descendants
+    import subprocess
+    from probes import _tree, adopt_orphans
+    adopt_orphans()
+    before = set(_tree(os.getpid()))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(HERE, "run.py"), "--workload",
+         "dedup_curation", "--seed", "1", "--seconds", "0", "--trace", "0"],
+        cwd=ROOT, capture_output=True, text=True, timeout=170)
+    left = set(_tree(os.getpid())) - before
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert json.loads(proc.stdout.splitlines()[-1])["correct"]
+    assert not left
