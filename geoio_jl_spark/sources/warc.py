@@ -8,14 +8,19 @@ Common Crawl ships crawls as tens of thousands of ~1 GB ``.warc.gz``
 segments, so file-level parallelism saturates any cluster) →
 ``mapInPandas`` record parser (Arrow batches, pure Python record walk
 per file).  ``.warc.gz`` uses the standard record-at-a-time gzip-member
-convention; ``gzip.decompress`` consumes concatenated members in one
-call.
+convention; one private member walker (:func:`_gzip_members`) inflates
+the concatenated members in time linear in the segment size by feeding
+zlib bounded windows of the buffer (the stdlib's one-call gunzip copies
+the rest of the buffer at every member: quadratic when there is one
+member per record).  A truncated or corrupt member raises ``ValueError``
+with the file name and its byte offset; tolerant mode keeps the records
+of the intact members before it.
 
 For SUB-file splits (one huge archive, or fewer files than cores),
 :func:`index_members` is the cdx-style one-pass index job — (file,
-member_idx, offset, length) per gzip member, found by walking member
-boundaries with a bounded-memory ``zlib.decompressobj`` (a magic-byte
-scan would false-positive inside compressed data) — and
+member_idx, offset, length) per gzip member, found by the same member
+walker with its output dropped (a magic-byte scan would false-positive
+inside compressed data) — and
 :func:`read_indexed` coalesces contiguous members into ~``split_bytes``
 spans and gives each task one seek+read of its span, so a single
 multi-member ``.warc.gz`` parses across many tasks with byte-identical
@@ -31,6 +36,7 @@ import gzip
 import hashlib
 import io
 import os
+import re
 import zlib
 
 import pandas as pd
@@ -49,6 +55,63 @@ SCHEMA = T.StructType([
 ])
 
 
+_GZIP_MAGIC = b"\x1f\x8b"
+_WINDOW = 16 << 10        # first input window of every member
+_MAX_WINDOW = 1 << 20     # windows double up to this for large members
+_SLICE = 1 << 20          # output slice when the inflated bytes are dropped
+_NONZERO = re.compile(rb"[^\x00]")
+
+
+def _gzip_members(data: bytes, keep: bool, fname: str = ""):
+    """Walk the concatenated gzip members of ``data``; yield
+    ``(offset, length, inflated)`` per member.
+
+    Each member is fed to ``zlib.decompressobj(31)`` in windows of a
+    memoryview — ``_WINDOW`` bytes first, doubling up to ``_MAX_WINDOW``
+    — and ends where its last window's short ``unused_data`` begins.  No
+    call sees the rest of the buffer, so the walk is linear: zlib gets
+    each byte once plus the overshoot of one window per member.  zlib
+    checks each member's CRC32 and ISIZE trailer.  Zero padding after a
+    member is skipped and counted in its ``length``, so spans stay
+    back-to-back.  ``inflated`` is the member's output when ``keep``,
+    else ``b""`` (the output is dropped in ``_SLICE`` pieces and memory
+    stays bounded).
+
+    Raises ``ValueError`` naming ``fname`` and the member's byte offset
+    on bytes that do not start a member, a truncated member or a corrupt
+    one."""
+    where = f"{fname}: " if fname else ""
+    view = memoryview(data)
+    pos, n = 0, len(data)
+    while pos < n:
+        if data[pos:pos + 2] != _GZIP_MAGIC:
+            raise ValueError(f"{where}not a gzip member at byte {pos}")
+        d = zlib.decompressobj(31)
+        pieces = []
+        at, window = pos, _WINDOW
+        try:
+            while not d.eof and at < n:
+                chunk = view[at:at + window]
+                at += len(chunk)
+                window = min(2 * window, _MAX_WINDOW)
+                if keep:
+                    pieces.append(d.decompress(chunk))
+                else:
+                    d.decompress(chunk, _SLICE)
+                    while d.unconsumed_tail:
+                        d.decompress(d.unconsumed_tail, _SLICE)
+        except zlib.error as e:
+            raise ValueError(
+                f"{where}corrupt gzip member at byte {pos}: {e}") from None
+        if not d.eof:
+            raise ValueError(f"{where}truncated gzip member at byte {pos}")
+        end = at - len(d.unused_data)
+        nonzero = _NONZERO.search(data, end)
+        nxt = nonzero.start() if nonzero else n
+        yield pos, nxt - pos, b"".join(pieces)
+        pos = nxt
+
+
 def parse_warc_bytes(data: bytes, fname: str = "",
                      strict: bool = True) -> list[dict]:
     """Parse one (decompressed) WARC file into record dicts.
@@ -57,9 +120,18 @@ def parse_warc_bytes(data: bytes, fname: str = "",
     structural error instead of failing the whole segment — real crawl
     archives occasionally carry one truncated/mis-lengthed record, and
     a deterministic raise would abort the ingest task for the entire
-    ~1 GB file after every retry."""
-    if data[:2] == b"\x1f\x8b":
-        data = gzip.decompress(data)     # concatenated members OK
+    ~1 GB file after every retry.  In a ``.warc.gz`` that error may be a
+    truncated or corrupt gzip member: the intact members before it are
+    still parsed."""
+    if data[:2] == _GZIP_MAGIC:
+        members = []
+        try:
+            for _, _, inflated in _gzip_members(data, keep=True, fname=fname):
+                members.append(inflated)
+        except ValueError:
+            if strict:
+                raise
+        data = b"".join(members)
     out = []
     pos = 0
     n = len(data)
@@ -127,27 +199,12 @@ def parse_warc_bytes(data: bytes, fname: str = "",
 def member_spans(data: bytes) -> list[tuple[int, int]]:
     """(offset, length) of every gzip member in a ``.warc.gz`` buffer.
 
-    Walks real member boundaries with ``zlib.decompressobj`` in 1 MiB
-    output slices that are immediately discarded — only offsets matter,
-    so peak memory stays bounded no matter how large a member inflates.
-    Raises on a truncated trailing member (an index must never silently
-    describe fewer bytes than the archive holds)."""
-    spans: list[tuple[int, int]] = []
-    pos, n = 0, len(data)
-    view = memoryview(data)
-    while pos < n:
-        if data[pos:pos + 2] != b"\x1f\x8b":
-            raise ValueError(f"not a gzip member at byte {pos}")
-        d = zlib.decompressobj(31)
-        d.decompress(view[pos:], 1 << 20)
-        while not d.eof and d.unconsumed_tail:
-            d.decompress(d.unconsumed_tail, 1 << 20)
-        if not d.eof:
-            raise ValueError(f"truncated gzip member at byte {pos}")
-        end = n - len(d.unused_data)
-        spans.append((pos, end - pos))
-        pos = end
-    return spans
+    Walks real member boundaries with :func:`_gzip_members`, whose 1 MiB
+    output slices are immediately discarded — only offsets matter, so
+    peak memory stays bounded no matter how large a member inflates.
+    Raises on a truncated or corrupt member (an index must never
+    silently describe fewer bytes than the archive holds)."""
+    return [(off, ln) for off, ln, _ in _gzip_members(data, keep=False)]
 
 
 INDEX_SCHEMA = T.StructType([

@@ -269,3 +269,145 @@ def test_read_indexed_accepts_prebuilt_index(spark, tmp_path):
     idx = warc.index_members(spark, p)
     got = warc.read_indexed(spark, p, index=idx, split_bytes=1 << 30)
     assert got.count() == 10
+
+
+# ---------------------------------------------------------------------------
+# gzip member walker: differential against gzip.decompress, tolerant-mode
+# recovery and linear input volume
+
+
+def _record(i, payload=None):
+    if payload is None:
+        payload = f"payload {i} ".encode() + b"y" * (i % 97)
+    return (b"WARC/1.0\r\n"
+            b"WARC-Type: resource\r\n"
+            b"WARC-Record-ID: <urn:uuid:" + str(i).encode() + b">\r\n"
+            b"Content-Length: " + str(len(payload)).encode() + b"\r\n"
+            b"\r\n" + payload + b"\r\n\r\n")
+
+
+def _members(n):
+    return [gzip.compress(_record(i), mtime=0) for i in range(n)]
+
+
+def _with_fname(raw):
+    import io
+    buf = io.BytesIO()
+    with gzip.GzipFile(filename="seg.warc", fileobj=buf, mode="wb",
+                       mtime=0) as g:
+        g.write(raw)
+    return buf.getvalue()
+
+
+def test_walker_matches_gzip_decompress(spark, tmp_path):
+    p = str(tmp_path / "w.warc.gz")
+    warc.write(_many_records(spark), p)
+    written = open(p, "rb").read()
+    m = _members(5)
+    pad = b"\x00" * 3
+    blobs = {
+        "per-record members (warc.write)": written,
+        "one whole-file member": gzip.compress(
+            b"".join(_record(i) for i in range(30)), mtime=0),
+        "zero padding between and after members":
+            m[0] + pad + m[1] + m[2] + b"\x00" + m[3] + m[4] + pad * 5,
+        "FNAME header": _with_fname(_record(7)) + m[1],
+        "empty-payload member": m[0] + gzip.compress(b"", mtime=0) + m[1],
+    }
+    for name, blob in blobs.items():
+        ref = gzip.decompress(blob)
+        walked = warc._gzip_members(blob, keep=True)
+        assert b"".join(m for _, _, m in walked) == ref, name
+        assert (warc.parse_warc_bytes(blob, "f")
+                == warc.parse_warc_bytes(ref, "f")), name
+    assert len(warc.parse_warc_bytes(written, "f")) == 40
+
+
+def test_member_spans_cover_padded_file():
+    """Zero padding after a member belongs to its span: spans stay
+    back-to-back (what read_indexed's coalescing relies on) and each
+    span parses to its one record."""
+    m = _members(4)
+    blob = m[0] + b"\x00\x00" + m[1] + m[2] + b"\x00" + m[3] + b"\x00" * 9
+    spans = warc.member_spans(blob)
+    assert [off for off, _ in spans] == [
+        0, len(m[0]) + 2, len(m[0] + m[1]) + 2, len(m[0] + m[1] + m[2]) + 3]
+    assert sum(ln for _, ln in spans) == len(blob)
+    for i, (off, ln) in enumerate(spans):
+        (rec,) = warc.parse_warc_bytes(blob[off:off + ln], "f")
+        assert rec["record_id"] == f"<urn:uuid:{i}>"
+
+
+def _flip_crc(member):
+    b = bytearray(member)
+    b[-8] ^= 0xFF                  # first byte of the CRC32 trailer
+    return bytes(b)
+
+
+def test_corrupt_crc_member():
+    m = _members(6)
+    blob = b"".join(m[:3]) + _flip_crc(m[3]) + b"".join(m[4:])
+    with pytest.raises(ValueError, match=(
+            rf"^seg\.warc\.gz: corrupt gzip member at byte "
+            rf"{len(b''.join(m[:3]))}\b")):
+        warc.parse_warc_bytes(blob, "seg.warc.gz")
+    with pytest.raises(ValueError, match="corrupt gzip member"):
+        warc.member_spans(blob)
+    kept = warc.parse_warc_bytes(blob, "seg.warc.gz", strict=False)
+    assert [r["record_id"] for r in kept] == [
+        f"<urn:uuid:{i}>" for i in range(3)]
+
+
+def test_truncated_last_member():
+    m = _members(50)
+    blob = b"".join(m)[:-5]
+    with pytest.raises(ValueError, match=(
+            rf"^seg\.warc\.gz: truncated gzip member at byte "
+            rf"{len(b''.join(m[:-1]))}$")):
+        warc.parse_warc_bytes(blob, "seg.warc.gz")
+    kept = warc.parse_warc_bytes(blob, "seg.warc.gz", strict=False)
+    assert len(kept) == 49
+    assert kept == warc.parse_warc_bytes(b"".join(m[:-1]), "seg.warc.gz")
+
+
+def test_trailing_garbage_after_members():
+    m = _members(3)
+    blob = b"".join(m) + b"\x00\x00junk"
+    with pytest.raises(ValueError, match=(
+            rf"^f: not a gzip member at byte {len(b''.join(m)) + 2}$")):
+        warc.parse_warc_bytes(blob, "f")
+    assert len(warc.parse_warc_bytes(blob, "f", strict=False)) == 3
+
+
+def test_walker_input_is_linear(monkeypatch):
+    """Count the bytes handed to zlib (no wall clock): at most the blob
+    plus one window per member, for both the parser and the index.
+    Feeding each member the rest of the buffer would hand zlib
+    members x bytes."""
+    import types
+    import zlib
+
+    fed = [0]
+
+    class _Counting:
+        def __init__(self, *args):
+            self._d = zlib.decompressobj(*args)
+
+        def decompress(self, buf, max_length=0):
+            fed[0] += len(buf)
+            return self._d.decompress(buf, max_length)
+
+        def __getattr__(self, name):
+            return getattr(self._d, name)
+
+    monkeypatch.setattr(warc, "zlib", types.SimpleNamespace(
+        decompressobj=_Counting, error=zlib.error))
+    m = _members(2000)
+    blob = b"".join(m)
+    bound = len(blob) + len(m) * warc._WINDOW
+    assert bound < len(m) * len(blob) // 8
+    for run in (lambda: warc.parse_warc_bytes(blob, "f"),
+                lambda: warc.member_spans(blob)):
+        fed[0] = 0
+        assert len(run()) == 2000
+        assert len(blob) <= fed[0] <= bound
