@@ -66,13 +66,3 @@ def cover_bbox_cells(df: DataFrame, minx: str, miny: str, maxx: str,
         out,
         F.lit(res).cast("bigint") * RES_BITS + F.col("_cx") * CX_BITS + F.col("_cy"),
     ).drop("_cx", "_cy")
-
-
-def neighbor_cells(cell_x: int, cell_y: int, ring: int) -> list[tuple[int, int]]:
-    """Driver-side ring expansion (kNN candidate cells)."""
-    out = []
-    for dx in range(-ring, ring + 1):
-        for dy in range(-ring, ring + 1):
-            if max(abs(dx), abs(dy)) == ring:
-                out.append((cell_x + dx, cell_y + dy))
-    return out

@@ -1,27 +1,11 @@
 """kNN join: for each query point, the k nearest data points.
 
-Two physical strategies, both returning identical rows:
-
-- ``knn_join_window`` — broadcast the (small) query side, theta-join, rank
-  with ``row_number`` over (distance, tiebreak).  Simple; one shuffle of
-  |points| x |queries| candidate rows.  Fine when |queries| is tiny; this is
-  the oracle-checked form (exact int64 squared distances).
-
-- ``knn_join_partial`` — the 100-TB shape when queries touch the whole
-  table: broadcast queries, compute a *local* top-k per partition inside an
-  Arrow-batched numpy kernel (map-side combine), then merge the
-  |partitions| x |queries| x k survivors with one tiny shuffle.  Shuffle
-  volume is O(P*Q*k), independent of |points|.
-
-- ``knn_join_pruned`` — the scan-pruned probe (reference analog: the
-  GPKG R-tree index, gpkg.jl:411-448): per-cell counts (a tiny, reusable
-  stats table) drive a driver-side Chebyshev ring expansion
-  (``cells.neighbor_cells``) until each query has >= k candidates; the
-  covered rings give an *exact* upper bound on the kth distance, and the
-  resulting per-query coordinate rectangles become plain range predicates
-  that reach the parquet scan as PushedFilters — on a Z-order-clustered
-  layout (operators/zorder.py) the scan opens only the files whose footer
-  stats overlap the rectangles instead of reading every row.
+The reference's only nearest-neighbour structure is the GPKG R-tree
+(gpkg.jl:411-448); here the role is one plan, a map-side partial top-k:
+broadcast the (small) query side, keep a *local* top-k per partition inside
+an Arrow-batched numpy kernel, then merge the |partitions| x |queries| x k
+survivors with one small shuffle and a ``row_number`` window.  Shuffle
+volume is O(P*Q*k), independent of |points|.
 
 Distances are squared-Euclidean in integer centidegrees (exact, hash-stable
 across engines); ties break on the point id.
@@ -29,37 +13,18 @@ across engines); ties break on the point id.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from geoio_jl_spark import dialect
-from geoio_jl_spark.operators.cells import neighbor_cells
 
-
-def knn_join_window(points: DataFrame, queries: DataFrame, k: int,
-                    px: str = "lon_i", py: str = "lat_i",
-                    qid: str = "query_id", qx: str = "qx", qy: str = "qy",
-                    point_id: str = "doc_id") -> DataFrame:
-    cand = points.join(F.broadcast(queries))
-    dist = (F.col(px) - F.col(qx)) ** 2 + (F.col(py) - F.col(qy)) ** 2
-    w = Window.partitionBy(qid).orderBy(F.col("dist2").asc(), F.col(point_id).asc())
-    return (
-        cand.withColumn("dist2", dist.cast("bigint"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid, point_id, "dist2", "rank")
-    )
-
-
-def knn_join_partial(points: DataFrame, queries: DataFrame, k: int,
-                     px: str = "lon_i", py: str = "lat_i",
-                     qid: str = "query_id", qx: str = "qx", qy: str = "qy",
-                     point_id: str = "doc_id") -> DataFrame:
-    """Map-side local top-k, then global merge (scale path)."""
+def knn_join(points: DataFrame, queries: DataFrame, k: int,
+             px: str = "lon_i", py: str = "lat_i",
+             qid: str = "query_id", qx: str = "qx", qy: str = "qy",
+             point_id: str = "doc_id") -> DataFrame:
+    """Rows ``(qid, point_id, dist2, rank)``: the k points nearest each
+    query, ranked by ``(dist2, point_id)``."""
     from geoio_jl_spark.shipping import ensure_pyfiles
     spark = points.sparkSession
     ensure_pyfiles(spark)
@@ -71,26 +36,32 @@ def knn_join_partial(points: DataFrame, queries: DataFrame, k: int,
 
     def local_topk(batches):
         ids, xs, ys = bq.value
-        best: dict[int, list] = {}
+        empty = np.empty(0, dtype=np.int64)
+        best_d = [empty] * len(ids)
+        best_p = [empty] * len(ids)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            p_id = pdf[point_id].values.astype(np.int64)
-            p_x = pdf[px].values.astype(np.int64)
-            p_y = pdf[py].values.astype(np.int64)
+            p_id = pdf[point_id].to_numpy(np.int64)
+            p_x = pdf[px].to_numpy(np.int64)
+            p_y = pdf[py].to_numpy(np.int64)
             # (Q, B) squared distances, vectorized
             d2 = (p_x[None, :] - xs[:, None]) ** 2 + (p_y[None, :] - ys[:, None]) ** 2
             kk = min(k, d2.shape[1])
-            part = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
+            # keep every point tied at the kk-th distance, so the cut to k
+            # below sees the lowest ids among them
+            kth = np.partition(d2, kk - 1, axis=1)[:, kk - 1]
             for qi in range(len(ids)):
-                sel = part[qi]
-                rows = list(zip(d2[qi, sel].tolist(), p_id[sel].tolist()))
-                cur = best.setdefault(int(ids[qi]), [])
-                cur.extend(rows)
-                cur.sort()
-                del cur[k:]
-        out = [(q, pid, d) for q, rows in best.items() for d, pid in rows]
-        yield pd.DataFrame(out, columns=[qid, point_id, "dist2"])
+                sel = d2[qi] <= kth[qi]
+                cd = np.concatenate([best_d[qi], d2[qi, sel]])
+                cp = np.concatenate([best_p[qi], p_id[sel]])
+                top = np.lexsort((cp, cd))[:k]
+                best_d[qi], best_p[qi] = cd[top], cp[top]
+        yield pd.DataFrame({
+            qid: np.repeat(ids, [len(d) for d in best_d]),
+            point_id: np.concatenate([empty, *best_p]),
+            "dist2": np.concatenate([empty, *best_d]),
+        })
 
     partial = points.select(point_id, px, py).mapInPandas(
         local_topk, schema=f"{qid} long, {point_id} long, dist2 long"
@@ -101,221 +72,3 @@ def knn_join_partial(points: DataFrame, queries: DataFrame, k: int,
         .filter(F.col("rank") <= k)
         .select(qid, point_id, "dist2", "rank")
     )
-
-
-def cell_count_stats(points: DataFrame, res: int,
-                     px: str = "lon_i", py: str = "lat_i") -> DataFrame:
-    """Per-cell point counts at resolution ``res`` — the tiny stats table
-    that drives ring expansion.  A column-pruned 2-int scan + one partial
-    agg; at 100 TB this is computed once per layout (or maintained
-    incrementally) and reused across every kNN query batch, exactly like
-    the reference keeps its R-tree persistent in the GPKG file
-    (gpkg.jl:411-448) instead of rebuilding it per query."""
-    e = dialect.cell_edge_centideg(res)
-    return (points
-            .groupBy(F.floor(F.col(px) / F.lit(float(e))).cast("bigint").alias("cx"),
-                     F.floor(F.col(py) / F.lit(float(e))).cast("bigint").alias("cy"))
-            .agg(F.count("*").alias("n")))
-
-
-def _query_rects(qrows, stats: dict, k: int, e: int):
-    """Driver-side planning: for each query point, expand Chebyshev rings
-    (cells.neighbor_cells) over the occupied-cell stats until the covered
-    region holds >= k points, derive the exact max possible kth-NN
-    distance (far corner of the covered square), and emit the coordinate
-    rectangle that provably contains the true k nearest.
-
-    Soundness: the k nearest candidates inside rings 0..r are all within
-    d_max = dist(q, far corner of the ring-r square), so the true kth-NN
-    distance is <= d_max; every point at distance <= d_max lies in the
-    rectangle [qx-d, qx+d] x [qy-d, qy+d].  Exact integer math throughout.
-    """
-    total = sum(stats.values())
-    if not stats:
-        return []
-    min_x = min(c[0] for c in stats)
-    max_x = max(c[0] for c in stats)
-    min_y = min(c[1] for c in stats)
-    max_y = max(c[1] for c in stats)
-    rects = []
-    for q_id, qx, qy in qrows:
-        qcx, qcy = qx // e, qy // e
-        # worst-case ring: covers every occupied cell from this query
-        # cell (bounds precomputed once — O(1) per query, not O(|cells|))
-        r_cap = max(abs(min_x - qcx), abs(max_x - qcx),
-                    abs(min_y - qcy), abs(max_y - qcy))
-        need = min(k, total)
-        cum = stats.get((qcx, qcy), 0)
-        r = 0
-        while cum < need and r < r_cap:
-            r += 1
-            cum += sum(stats.get(c, 0) for c in neighbor_cells(qcx, qcy, r))
-        # exact far-corner distance of the covered square region
-        dx = max(qx - (qcx - r) * e, (qcx + r + 1) * e - qx)
-        dy = max(qy - (qcy - r) * e, (qcy + r + 1) * e - qy)
-        d2 = dx * dx + dy * dy
-        d = math.isqrt(d2)
-        if d * d < d2:
-            d += 1
-        rects.append((q_id, qx, qy, qx - d, qx + d, qy - d, qy + d, d2))
-    return rects
-
-
-def collect_cell_stats(points: DataFrame, res: int,
-                       px: str = "lon_i", py: str = "lat_i") -> dict:
-    """``cell_count_stats`` collected to the driver-side dict the ring
-    planner consumes.  Compute ONCE per layout and pass to every
-    ``knn_join_pruned`` call on that table — the compute-once-per-layout
-    contract that mirrors the reference's persistent GPKG R-tree
-    (gpkg.jl:411-448)."""
-    return {(r["cx"], r["cy"]): r["n"]
-            for r in cell_count_stats(points, res, px, py).collect()}
-
-
-def _merge_rects(boxes: list, max_clauses: int) -> list:
-    """Driver-side planning: collapse per-query rectangles into at most
-    ``max_clauses`` boxes for the scan-pushdown disjunction.
-
-    Two phases (r5 — the r4 greedy min-waste pass alone rescanned all
-    O(n²) pairs per removal, O(n³) overall: a dispersed 10⁴-query
-    batch could stall the driver for minutes):
-
-    1. O(n log n) grid coarsening down to 4×budget: bucket boxes by
-       center cell at a doubling cell size, union per bucket —
-       spatially clustered queries (the common case) collapse to one
-       tight box per cluster in the first rounds.
-    2. The exact greedy min-waste merge from 4×budget down to the
-       budget — now bounded work on <= 4·max_clauses boxes, keeping
-       the fine-grained budget-filling behavior the coarse grid alone
-       can overshoot (a doubling step can jump from budget+1 straight
-       to 1 box).
-
-    A final fixpoint overlap-merge removes redundant clauses.  Merging
-    only ever GROWS coverage, so the pushdown stays a superset of the
-    exact per-query rectangles (correctness comes from the
-    broadcast-join predicates downstream)."""
-    boxes = list({tuple(int(v) for v in b) for b in boxes})
-    if not boxes:
-        return []
-
-    def union(a, b):
-        return (min(a[0], b[0]), max(a[1], b[1]),
-                min(a[2], b[2]), max(a[3], b[3]))
-
-    s = max(1, min(b[1] - b[0] for b in boxes))
-    while len(boxes) > 4 * max_clauses:
-        buckets: dict = {}
-        for b in boxes:
-            key = ((b[0] + b[1]) // (2 * s), (b[2] + b[3]) // (2 * s))
-            cur = buckets.get(key)
-            buckets[key] = b if cur is None else union(cur, b)
-        boxes = sorted(buckets.values())
-        s *= 2
-    while len(boxes) > max_clauses:
-        best, bi, bj = None, 0, 1
-        for i in range(len(boxes)):
-            for j in range(i + 1, len(boxes)):
-                u = union(boxes[i], boxes[j])
-                waste = ((u[1] - u[0]) * (u[3] - u[2])
-                         - (boxes[i][1] - boxes[i][0])
-                         * (boxes[i][3] - boxes[i][2])
-                         - (boxes[j][1] - boxes[j][0])
-                         * (boxes[j][3] - boxes[j][2]))
-                if best is None or waste < best:
-                    best, bi, bj = waste, i, j
-        boxes[bi] = union(boxes[bi], boxes[bj])
-        del boxes[bj]
-
-    def overlaps(a, b):
-        return a[0] <= b[1] and b[0] <= a[1] and a[2] <= b[3] and b[2] <= a[3]
-
-    merged = True
-    while merged:
-        merged = False
-        out: list = []
-        for b in boxes:
-            for i, a in enumerate(out):
-                if overlaps(a, b):
-                    out[i] = union(a, b)
-                    merged = True
-                    break
-            else:
-                out.append(b)
-        boxes = out
-    return boxes
-
-
-def knn_join_pruned(points: DataFrame, queries: "DataFrame | list", k: int,
-                    res: int = 3,
-                    px: str = "lon_i", py: str = "lat_i",
-                    qid: str = "query_id", qx: str = "qx", qy: str = "qy",
-                    point_id: str = "doc_id",
-                    cell_stats: "DataFrame | dict | None" = None,
-                    max_scan_clauses: int = 32) -> DataFrame:
-    """Scan-pruned exact kNN join (same rows as ``knn_join_window``).
-
-    Physical shape: a DISJUNCTION of range boxes on (px, py) covering the
-    per-query rectangles (overlapping rects merged, capped at
-    ``max_scan_clauses`` clauses) — plain ``>=``/``<=`` comparisons that
-    Spark pushes into the parquet scan (PushedFilters; footer min/max
-    skipping on a Z-order-clustered layout).  Unlike a single global
-    bounding box, the OR-of-boxes survives dispersed query batches: two
-    query clusters on opposite sides of the world prune to two small
-    boxes instead of a union rectangle covering the whole extent.  Then a
-    broadcast join against the <=|Q| rectangle rows applies the exact
-    per-query range + distance-bound predicates, and the usual window
-    top-k ranks the survivors.  Candidate volume is
-    O(|Q| * k * ring-overshoot), independent of |points|.
-
-    ``cell_stats`` may be the DataFrame from ``cell_count_stats`` or —
-    the amortized path — the dict from ``collect_cell_stats`` (no
-    per-call Spark action at all).
-    """
-    spark = points.sparkSession
-    if isinstance(cell_stats, dict):
-        stats = cell_stats
-    else:
-        if cell_stats is None:
-            cell_stats = cell_count_stats(points, res, px, py)
-        stats = {(r["cx"], r["cy"]): r["n"] for r in cell_stats.collect()}
-    e = dialect.cell_edge_centideg(res)
-    if isinstance(queries, list):
-        # amortized path: pre-collected (id, x, y) tuples — the query
-        # batch is driver-side by contract, so repeated calls pay zero
-        # Spark actions for planning
-        qrows = [(int(q), int(x), int(y)) for (q, x, y) in queries]
-    else:
-        qrows = [(r[0], r[1], r[2])
-                 for r in queries.select(qid, qx, qy).collect()]
-    rects = _query_rects(qrows, stats, k, e)
-    if not rects:
-        return (points.select(point_id).limit(0)
-                .withColumn(qid, F.lit(None).cast("bigint"))
-                .withColumn("dist2", F.lit(None).cast("bigint"))
-                .withColumn("rank", F.lit(None).cast("int"))
-                .select(qid, point_id, "dist2", "rank"))
-    rect_df = spark.createDataFrame(
-        rects, f"{qid} long, {qx} long, {qy} long, "
-               "x_lo long, x_hi long, y_lo long, y_hi long, d2_max long")
-    # OR-of-boxes over the (merged) rectangles: the predicate that
-    # reaches the parquet scan (PushedFilters) and prunes files/row-groups
-    boxes = _merge_rects([(r[3], r[4], r[5], r[6]) for r in rects],
-                         max_scan_clauses)
-    cond = None
-    for (xl, xh, yl, yh) in boxes:
-        c = ((F.col(px) >= xl) & (F.col(px) <= xh)
-             & (F.col(py) >= yl) & (F.col(py) <= yh))
-        cond = c if cond is None else (cond | c)
-    pruned = points.filter(cond)
-    cand = pruned.join(
-        F.broadcast(rect_df),
-        on=[F.col(px) >= F.col("x_lo"), F.col(px) <= F.col("x_hi"),
-            F.col(py) >= F.col("y_lo"), F.col(py) <= F.col("y_hi")])
-    dist = (F.col(px) - F.col(qx)) ** 2 + (F.col(py) - F.col(qy)) ** 2
-    w = Window.partitionBy(qid).orderBy(F.col("dist2").asc(),
-                                        F.col(point_id).asc())
-    return (cand.withColumn("dist2", dist.cast("bigint"))
-            .filter(F.col("dist2") <= F.col("d2_max"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(qid, point_id, "dist2", "rank"))

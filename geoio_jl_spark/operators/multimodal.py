@@ -479,7 +479,9 @@ def synthetic_cluster_pngs(df: DataFrame, id_col: str = "doc_id",
         outv = []
         for d in ids:
             d = int(d)
-            c = d // 8
+            # reduced mod 251 first: the same pixels, and the int64
+            # product below cannot wrap for any id
+            c = d // 8 % 251
             # quadratic mix → cross-cluster hashes decorrelate (a
             # linear gradient left most comparisons equal everywhere)
             p = ((c * 97 + i + 9 * j + 1)

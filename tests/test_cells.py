@@ -57,9 +57,3 @@ def test_point_cell_within_cover(spark):
     pts_cells = {r["c"] for r in
                  pts.select(C.cell_id_col("lon_i", "lat_i", 3).alias("c")).collect()}
     assert pts_cells <= cover
-
-
-def test_neighbor_cells_ring():
-    assert len(C.neighbor_cells(5, 5, 0)) == 1
-    assert len(C.neighbor_cells(5, 5, 1)) == 8
-    assert len(C.neighbor_cells(5, 5, 2)) == 16

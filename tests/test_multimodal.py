@@ -187,6 +187,30 @@ def test_image_neardup_planted(spark):
     assert all(k == (1, 2) for k in pairs)
 
 
+def test_synthetic_cluster_pngs_large_ids(spark):
+    """Ids near 3e8 make the unreduced pixel product exceed int64: the
+    generator must match exact Python-int arithmetic, and the DuckDB
+    oracle must give the same pairs instead of raising on overflow."""
+    import duckdb
+
+    from geoio_jl_spark.queries import _SQL_IMAGE_NEARDUP
+    from geoio_jl_spark.sources.img import decode_png
+    ids = list(range(300_000_000, 300_000_016))
+    df = spark.createDataFrame([(d,) for d in ids], "doc_id bigint")
+    imgs = M.synthetic_cluster_pngs(df)
+    for r in imgs.collect():
+        d, c = r["doc_id"], r["doc_id"] // 8
+        exp = [[min(((c * 97 + i + 9 * j + 1) * (c * 89 + i * 7 + j * 3 + 7))
+                    % 251 + (50 if (i, j) == (d % 9, d % 8) else 0), 255)
+                for i in range(9)] for j in range(8)]
+        assert decode_png(bytes(r["image"]))[:, :, 0].tolist() == exp, d
+    got = {tuple(r) for r in
+           M.image_neardup_pairs(imgs, max_hamming=7, bands=8).collect()}
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame({"doc_id": ids}))
+    assert got and got == set(con.execute(_SQL_IMAGE_NEARDUP).fetchall())
+
+
 def test_image_neardup_guards():
     with pytest.raises(ValueError, match="pigeonhole"):
         M.image_neardup_pairs(None, max_hamming=8, bands=8)
